@@ -41,7 +41,7 @@ object SparkEntry {
   private val labelUniverse =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts has varied across driver testdata generations:
       // TIMESTAMP(NANOS) (which Spark's reader rejects natively —
@@ -253,7 +253,7 @@ object SparkEntry {
   /** Series-only select — the reference's skipChunks fast path
     * (`/api/v1/series`, parquet_queryable.go:322 / materialize.go:164):
     * distinct label sets under matchers + range, sample values never
-    * materialized (PlanAudit asserts `value` is absent from the
+    * materialized (PlanAuditSpec asserts `value` is absent from the
     * scan's ReadSchema).
     */
   private def tsSelectSeries(s: SparkSession, dir: String): DataFrame =
@@ -350,7 +350,7 @@ object SparkEntry {
     * information once, per time bucket). The unmatched enumeration —
     * Grafana's autocomplete shape — routes through index rows;
     * results must be IDENTICAL to the raw distinct-scans (the oracle
-    * runs those raw scans), and PlanAudit asserts the compiled plan
+    * runs those raw scans), and PlanAuditSpec asserts the compiled plan
     * reads the index only, raw events absent. At 100 TB:
     * `label_values(user_id)` reads buckets × labels × distinct
     * values index rows instead of a full column of every sample.
@@ -384,7 +384,7 @@ object SparkEntry {
     * buckets the enumeration still routes through the materialized
     * label index (bucket-pruned — at 100 TB a one-week label probe
     * reads seven buckets' index rows). The oracle runs the raw
-    * distinct-scans restricted to the same range; PlanAudit asserts
+    * distinct-scans restricted to the same range; PlanAuditSpec asserts
     * the scoped plan reads the index only.
     */
   private def tsLabelValuesRanged(s: SparkSession, dir: String): DataFrame = {
@@ -709,7 +709,7 @@ object SparkEntry {
     * layer wins routing): the ladder's inputs reconstruct exactly
     * from the layer, so the oracle — the same raw-sample DuckDB
     * extrapolation replay the un-routed gates use — must hash-match
-    * while the plan reads ~1/100th the rows (PlanAudit asserts the
+    * while the plan reads ~1/100th the rows (PlanAuditSpec asserts the
     * raw table is absent from the scan).
     */
   private def tsPromqlRollupRangeRate(s: SparkSession, dir: String): DataFrame =
@@ -900,7 +900,7 @@ object SparkEntry {
     * long-range query shape — the layer reads windows-in-range per
     * bucket series instead of every raw sample. The oracle replays
     * the raw ladder per le-series + the classic interpolation walk;
-    * PlanAudit asserts the compiled plan reads the layer only.
+    * PlanAuditSpec asserts the compiled plan reads the layer only.
     */
   private def tsPromqlRollupClassicQuantile(s: SparkSession, dir: String): DataFrame = {
     val p = classicRollupPath(dir)
@@ -959,7 +959,7 @@ object SparkEntry {
     * with a derived `plan` label carried onto every matched left
     * series; result = each series' share of its user's total. The
     * uniqueness guard runs distributed on the right side; Catalyst
-    * broadcasts it (PlanAudit asserts the broadcast).
+    * broadcasts it (PlanAuditSpec asserts the broadcast).
     */
   private def tsGroupLeft(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")
@@ -1291,7 +1291,7 @@ object SparkEntry {
     * dim_07 is absent must be KEPT by `!~"v0"` (null behaves as ""),
     * rows where it is present (its value is v0 throughout the
     * residue class the equality pins) must be DROPPED. Projected to
-    * 3 of the 48 label columns. PlanAudit asserts the equality
+    * 3 of the 48 label columns. PlanAuditSpec asserts the equality
     * reaches PushedFilters and ReadSchema holds 5 of the 50 stored
     * columns. The oracle replays the modular synthesis + both
     * matcher semantics on the raw long table.
@@ -1623,7 +1623,7 @@ object SparkEntry {
     * queryable/parquet_queryable.go:414 `Query` with
     * `skipChunks=true`, the Prometheus `series()` API): matcher-
     * filtered label sets straight from the labels file; the chunks
-    * file never enters the plan (PlanAudit forbids it), so the query
+    * file never enters the plan (PlanAuditSpec forbids it), so the query
     * is metadata-sized regardless of sample volume.
     */
   private def tsShardSeries(s: SparkSession, dir: String): DataFrame = {

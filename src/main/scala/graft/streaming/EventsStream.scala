@@ -355,7 +355,7 @@ object EventsStream {
         col("vmin_ts_ms"), col("vmax_nn"), col("vmax_ts_ms"),
         col("increase").cast("decimal(30,8)").as("increase"),
         col("resets"), col("changes"),
-        col("vsq").cast("decimal(31,16)").as("vsq"),
+        col("vsq").cast(graft.tsdb.PromOps.SumSqType).as("vsq"),
         col("sx").cast("decimal(20,0)").as("sx"),
         col("sxx").cast("decimal(30,0)").as("sxx"),
         col("sxy").cast("decimal(33,8)").as("sxy"),

@@ -134,12 +134,7 @@ object ChunkStore {
     // bucket pruning: partition values are floor(epoch_sec/width),
     // so the directory range covering [mint, maxt) is a static
     // predicate the scan prunes on (maxt side exclusive)
-    val secs = Seq("second" -> 1L, "minute" -> 60L, "hour" -> 3600L,
-      "day" -> 86400L).toMap
-    val width = colDuration.trim.split("\\s+") match {
-      case Array(n, u) => n.toLong * secs(u.toLowerCase.stripSuffix("s"))
-      case _ => throw new IllegalArgumentException(s"bad duration $colDuration")
-    }
+    val width = TsdbConverter.durationSeconds(colDuration)
     val loBucket = floor(unix_timestamp(lit(mint).cast("timestamp")) / width)
     val hiBucket = floor((unix_timestamp(lit(maxt).cast("timestamp")) - 1) / width)
 

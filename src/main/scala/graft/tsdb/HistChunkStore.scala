@@ -202,12 +202,7 @@ object HistChunkStore {
 
     val qmint = unix_micros(lit(mint).cast("timestamp"))
     val qmaxt = unix_micros(lit(maxt).cast("timestamp"))
-    val secs = Seq("second" -> 1L, "minute" -> 60L, "hour" -> 3600L,
-      "day" -> 86400L).toMap
-    val width = colDuration.trim.split("\\s+") match {
-      case Array(n, u) => n.toLong * secs(u.toLowerCase.stripSuffix("s"))
-      case _ => throw new IllegalArgumentException(s"bad duration $colDuration")
-    }
+    val width = TsdbConverter.durationSeconds(colDuration)
     val loBucket = floor(unix_timestamp(lit(mint).cast("timestamp")) / width)
     val hiBucket = floor((unix_timestamp(lit(maxt).cast("timestamp")) - 1) / width)
 

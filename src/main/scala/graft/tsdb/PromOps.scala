@@ -238,11 +238,10 @@ object PromOps {
         percentile(col(valueCol), lit(q)).as("quantile"),
         count(lit(1)).cast("decimal(6,0)").as("_n"),
         sum(y).cast("decimal(16,8)").as("_sy"),
-        sum((y * y).cast("decimal(30,16)")).cast("decimal(31,16)").as("_syy"),
+        sumSq(y).as("_syy"),
         sum(col(valueCol).cast("decimal(30,8)")).cast("double").as("_sv"),
         count(lit(1)).as("n_samples"))
-      .withColumn("_num", (col("_n") * col("_syy") -
-        col("_sy") * col("_sy")).cast("decimal(36,16)"))
+      .withColumn("_num", stdvarNumerator(col("_n"), col("_sy"), col("_syy")))
       .select(by.map(col) :+ col("bucket") :+ col("quantile") :+
         (col("_sv") / col("n_samples")).as("avg_value") :+
         sqrt(col("_num").cast("double") /
@@ -346,7 +345,7 @@ object PromOps {
     *
     * Shape at scale: the check windows only the right side — the
     * small "one" vector — and the join keys on the `on` labels;
-    * Catalyst broadcasts the small side (PlanAudit-asserted for the
+    * Catalyst broadcasts the small side (PlanAuditSpec-asserted for the
     * gate query), so the big left vector never shuffles.
     */
   def binaryOpGroupLeft(left: DataFrame, right: DataFrame, on: Seq[String],
@@ -617,6 +616,28 @@ object PromOps {
           (evalCol + lit(horizonMs) - lit(originMs)).cast("double"))
           .as("predicted"): _*)
 
+  /** Σv² for the exact variance closed form, over v already quantized
+    * to decimal(18,8) (|v| < 1e10). Each square is exact at 16 decimal
+    * places and accumulates in decimal(38,16); that type is also the
+    * stored `vsq` rollup column, so re-summing windows keeps it. The
+    * remaining bound is |Σv²| < 1e22 per group (e.g. 1,600 samples at
+    * |v| = 2.5e9); beyond it the sum overflows loudly under ANSI.
+    */
+  def sumSq(y: Column): Column = sum((y * y).cast(SumSqType))
+
+  /** The type [[sumSq]] accumulates and stores in. */
+  val SumSqType = "decimal(38,16)"
+
+  /** n·Σv² − (Σv)², the numerator of the (n·Σv² − (Σv)²)/n² variance
+    * closed form, exact at 16 decimal places. Σv² narrows to
+    * decimal(31,16) so the product with n (decimal(6,0)) is
+    * decimal(38,16) with no rounding; the closed form therefore holds
+    * for |Σv²| < 1e15 and |Σv| < 1e8 (decimal(16,8)), and overflows
+    * loudly under ANSI beyond that.
+    */
+  def stdvarNumerator(n: Column, sy: Column, syy: Column): Column =
+    (n * syy.cast("decimal(31,16)") - sy * sy).cast("decimal(36,16)")
+
   /** PromQL `stdvar_over_time` / `stddev_over_time`: per-series
     * POPULATION variance and standard deviation. Computed as
     * (n·Σv² − (Σv)²) / n² over exact decimal sums (v quantized at
@@ -632,10 +653,8 @@ object PromOps {
       .agg(
         count(lit(1)).cast("decimal(6,0)").as("_n"),
         sum(col("_y")).cast("decimal(16,8)").as("_sy"),
-        sum((col("_y") * col("_y")).cast("decimal(30,16)"))
-          .cast("decimal(31,16)").as("_syy"))
-      .withColumn("_num", (col("_n") * col("_syy") -
-        col("_sy") * col("_sy")).cast("decimal(36,16)"))
+        sumSq(col("_y")).as("_syy"))
+      .withColumn("_num", stdvarNumerator(col("_n"), col("_sy"), col("_syy")))
       .select(seriesCols.map(col) :+
         (col("_num").cast("double") /
           (col("_n") * col("_n")).cast("double")).as("stdvar") :+

@@ -78,8 +78,9 @@ object RollupStore {
     *
     * Beyond the headline columns the layer stores the exact moment
     * sums the remaining range functions reconstruct from:
-    *   - `vsq` DECIMAL(31,16) — Σ v² with v quantized at 8 dp (the
-    *     identical accumulation [[PromOps.stdvarOverTime]] runs), so
+    *   - `vsq` DECIMAL(38,16) — Σ v² with v quantized at 8 dp (the
+    *     identical [[PromOps.sumSq]] accumulation
+    *     [[PromOps.stdvarOverTime]] runs), so
     *     routed `stddev/stdvar_over_time` recompute the same
     *     (n·Σv² − (Σv)²)/n² closed form from equal decimals;
     *   - `sx`/`sxx`/`sxy` — the regression sums Σx, Σx², Σx·v with
@@ -155,8 +156,7 @@ object RollupStore {
         sum(col("_delta").cast(D)).cast(D).as("increase"),
         sum(col("_reset")).as("resets"),
         sum(col("_chg")).as("changes"),
-        sum((col("_y18") * col("_y18")).cast("decimal(30,16)"))
-          .cast("decimal(31,16)").as("vsq"),
+        PromOps.sumSq(col("_y18")).as("vsq"),
         sum(col("_xw")).cast("decimal(20,0)").as("sx"),
         sum((col("_xw") * col("_xw")).cast("decimal(25,0)"))
           .cast("decimal(30,0)").as("sxx"),
@@ -237,7 +237,7 @@ object RollupStore {
           .as("_ok"), col("vmax_nn").as("_v"),
           col("vmax_ts_ms").as("_ts"))).as("_mx"),
         sort_array(collect_list(windowStruct)).as("_w"),
-        sum(col("vsq")).cast("decimal(31,16)").as("vsq"),
+        sum(col("vsq")).as("vsq"),
         sum(col("sx") + col("n") * dw).cast("decimal(20,0)").as("sx"),
         sum(col("sxx") + lit(2) * dw * col("sx") + col("n") * dw * dw)
           .cast("decimal(30,0)").as("sxx"),

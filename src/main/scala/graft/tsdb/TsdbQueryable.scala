@@ -332,7 +332,7 @@ final class TsdbQueryable(
     * payload: the distinct label sets matching `matchers` within
     * [mint, maxt) are computed from a scan that projects only the
     * label columns plus the `ts` predicate column — the `value`
-    * column never enters ReadSchema (PlanAudit-asserted), so at
+    * column never enters ReadSchema (PlanAuditSpec-asserted), so at
     * 100 TB this reads the dictionary-encoded label columns and the
     * timestamp column only, and the distinct partial-aggregates
     * map-side down to series cardinality before the one shuffle.

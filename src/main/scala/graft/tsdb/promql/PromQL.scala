@@ -398,7 +398,7 @@ object PromQL {
       // a function of the column would not reach PushedFilters, and
       // with integer-ms bounds the two are equivalent
       // (floor(x) >= s ⟺ x >= s and floor(x) < e ⟺ x < e for
-      // integer s, e) — PlanAudit asserts the pushdown
+      // integer s, e) — PlanAuditSpec asserts the pushdown
       val tsCol = col(ctx.tsCol).cast("timestamp")
       val filtered0 = graft.tsdb.Matcher.compile(sel.matchers)
         .map(table.filter).getOrElse(table)
@@ -1129,9 +1129,9 @@ object PromQL {
           val agg = g.agg(
             sum(col("n")).cast("decimal(6,0)").as("_n"),
             sum(col("vsum")).cast("decimal(16,8)").as("_sy"),
-            sum(col("vsq")).cast("decimal(31,16)").as("_syy"))
-            .withColumn("_num", (col("_n") * col("_syy") -
-              col("_sy") * col("_sy")).cast("decimal(36,16)"))
+            sum(col("vsq")).as("_syy"))
+            .withColumn("_num",
+              PromOps.stdvarNumerator(col("_n"), col("_sy"), col("_syy")))
           val stdvar = col("_num").cast("double") /
             (col("_n") * col("_n")).cast("double")
           agg.withColumn("value",
@@ -1838,10 +1838,10 @@ object PromQL {
           val sums = grouped.agg(
             count(lit(1)).cast("decimal(6,0)").as("_n"),
             sum(y).cast("decimal(16,8)").as("_sy"),
-            sum((y * y).cast("decimal(30,16)")).cast("decimal(31,16)").as("_syy"))
+            PromOps.sumSq(y).as("_syy"))
             .filter(col("_n") > 0)
-          val varCol = (col("_n") * col("_syy") - col("_sy") * col("_sy"))
-            .cast("decimal(36,16)").cast("double") /
+          val varCol = PromOps.stdvarNumerator(col("_n"), col("_sy"),
+              col("_syy")).cast("double") /
             (col("_n") * col("_n")).cast("double")
           stamped(sums.select(k.map(col) :+
             (if (a.op == "stddev") sqrt(varCol) else varCol).as("value"): _*), g)

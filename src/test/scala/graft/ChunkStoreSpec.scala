@@ -150,6 +150,21 @@ class ChunkStoreSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"))
   }
 
+  test("an unknown bucket-duration unit fails with the converter's typed error") {
+    // the chunk layouts size their bucket range with the same parser
+    // the converter partitions by, so a unit it does not know is one
+    // IllegalArgumentException on either select path
+    val range = ("2024-01-01 00:00:00", "2024-01-02 00:00:00")
+    val chunked = intercept[IllegalArgumentException](
+      ChunkStore.select(spark, blockPath, range._1, range._2, Nil,
+        Seq("event_type", "user_id"), "ts", "value", colDuration = "1 week"))
+    assert(chunked.getMessage == "bad unit week")
+    val hist = intercept[IllegalArgumentException](
+      graft.tsdb.HistChunkStore.select(spark, blockPath, range._1, range._2,
+        Nil, Seq("event_type", "user_id"), "ts", colDuration = "1 week"))
+    assert(hist.getMessage == "bad unit week")
+  }
+
   test("labels and chunks files compress independently (WithLabels/ChunksCompression analog)") {
     import org.apache.hadoop.conf.Configuration
     import org.apache.hadoop.fs.Path

@@ -96,6 +96,18 @@ class RollupStoreSpec extends SparkSpec {
     assert(cascaded == daily)
   }
 
+  test("Σv² holds a 240-sample hourly window of a 2.5e9 gauge") {
+    // process_resident_memory_bytes scale, one sample every 15 s:
+    // each square is ~6.25e18, past a 14-integer-digit accumulator
+    val rss = (0 until 240).map(i =>
+      ("a", new Timestamp(base + i * 15000L), 2.5e9 + i)).toDF("series", "ts", "value")
+    val p = s"/tmp/graft_rollupspec_rss_$HOUR"
+    RollupStore.write(rss, p, Seq("series"), "ts", "value", HOUR)
+    val vsq = RollupStore.read(spark, p).select("vsq").as[BigDecimal].collect.toSeq
+    val exact = (0 until 240).map(i => BigDecimal(2.5e9) + i).map(v => v * v).sum
+    assert(vsq == Seq(exact))
+  }
+
   test("stitchedIncrease ≡ the direct raw fold, and is layer-independent") {
     // direct fold over all consecutive pairs of series a:
     // +20, reset→5, +3, reset→2, +28 = 58
